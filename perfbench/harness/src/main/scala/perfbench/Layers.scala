@@ -13,7 +13,7 @@ object Layers {
       "ir.parse_s", "encode.encode_s", "estimate.featurize_s", "estimate.gbt_fit_s",
       "estimate.predict_s") ++
     EstimatorBench.Models.map(m => s"score.${m}_s") ++
-    Seq("host.calib_s", "sql_catalog_s", "train_s")
+    Seq("host.calib_s", "sql_catalog_s", "train_s", "round_s")
   private val counts = Seq("catalyst.executions", "spark.jobs", "spark.stages", "spark.tasks")
   private val mb = Seq("spark.shuffle_write_mb", "spark.shuffle_read_mb", "spark.spill_mb",
     "spark.input_mb", "spark.peak_task_mem_mb", "cache.leaked_mb")

@@ -60,9 +60,11 @@ object Band {
 }
 
 /** ops_pipeline: the data-pipeline operator queries, each result fully
-  * collected, in an order fixed by the seed. */
+  * collected, in a fixed order. The round is a fresh JVM's first, and
+  * its first query pays most of the JVM's JIT compilation: in an order
+  * drawn from the seed that cost moved between queries, and `round_s`
+  * of runs with different seeds spread by up to a quarter. */
 final class OpsPipeline(opts: Opts) extends Workload {
-  private var order: Seq[String] = Nil
   private var queries: Map[String, (SparkSession, String) => DataFrame] = Map.empty
   private var oracle: Map[String, String] = Map.empty
   private var fingerprint = 0L
@@ -72,15 +74,15 @@ final class OpsPipeline(opts: Opts) extends Workload {
     queries = SparkEntry.queries
     oracle = SparkEntry.oracleSql
     fingerprint = Tables.canonFingerprint(opts.data)
-    order = new Random(opts.seed).shuffle(OpsPipeline.Queries)
   }
 
   def round(spark: SparkSession, ctx: Ctx): Map[String, Double] = {
-    val figs = mutable.Map("round_s" -> 0.0, "cache.leaked_mb" -> 0.0)
-    order.foreach { q =>
+    val figs = mutable.Map("round_s" -> 0.0, "round_cpu_s" -> 0.0, "cache.leaked_mb" -> 0.0)
+    OpsPipeline.Queries.foreach { q =>
       ctx.op(s"ops.$q", q)(Util.collect(queries(q)(spark, opts.data))).foreach {
         case ((schema, rows), secs) =>
           Util.addTo(figs, "round_s", secs)
+          Util.addTo(figs, "round_cpu_s", ctx.tracer.lastCpuS)
           Util.addTo(figs, s"ops.${OpsPipeline.Families(q)}_s", secs)
           Util.addTo(figs, s"ops.${q.takeWhile(_ != '_')}_s", secs)
           if (q == "q115_bpe_merges") ctx.check(q, Checks.bpeMerges(rows), "BPE merge table")
@@ -121,8 +123,8 @@ object OpsPipeline {
       "q83_upsert", "q88_json_extract", "q98_schema_evolution"),
   ).flatMap { case (f, qs) => qs.map(_ -> f) }.toMap
 
-  /** The queries a round runs: the bloom-filter trio and one query of
-    * each of four more families. */
+  /** The queries a round runs, in this order: the bloom-filter trio and
+    * one query of each of four more families. */
   val Queries: Seq[String] = Seq(
     "q66_bloom_contamination", "q72_bloom_join", "q73_bloom_anti_join", "q115_bpe_merges",
     "q30_dedup_exact", "q83_upsert", "q107_weighted_sample")
@@ -130,10 +132,10 @@ object OpsPipeline {
 
 /** sql_lab: catalog SQL queries, then the lab's labelling of a fixed,
   * runtime-stratified sample of the committed measured workload
-  * (`perfbench/run.py` draws it), both in an order fixed by the seed. */
+  * (`perfbench/run.py` draws it), both in a fixed order, for the same
+  * reason as in ops_pipeline. */
 final class SqlLab(opts: Opts) extends Workload {
   private var sample: Seq[Band.Query] = Nil
-  private var catalog: Seq[String] = Nil
   private var queries: Map[String, (SparkSession, String) => DataFrame] = Map.empty
   private var oracle: Map[String, String] = Map.empty
   private var fingerprint = 0L
@@ -144,18 +146,18 @@ final class SqlLab(opts: Opts) extends Workload {
     queries = SparkEntry.queries
     oracle = SparkEntry.oracleSql
     fingerprint = Tables.canonFingerprint(opts.data)
-    catalog = new Random(opts.seed).shuffle(SqlLab.Catalog)
     sample = Band.load(opts.sample)
     executor = new graft.lab.Executor(spark)
   }
 
   def round(spark: SparkSession, ctx: Ctx): Map[String, Double] = {
     val figs = mutable.Map("sql_catalog_s" -> 0.0, "lab.analyze_s" -> 0.0,
-      "lab.light_s" -> 0.0, "lab.heavy_s" -> 0.0)
-    catalog.foreach { q =>
+      "lab.light_s" -> 0.0, "lab.heavy_s" -> 0.0, "round_cpu_s" -> 0.0)
+    SqlLab.Catalog.foreach { q =>
       ctx.op("sql.catalog", q)(Util.collect(queries(q)(spark, opts.data))).foreach {
         case ((schema, rows), secs) =>
           Util.addTo(figs, "sql_catalog_s", secs)
+          Util.addTo(figs, "round_cpu_s", ctx.tracer.lastCpuS)
           ctx.output(s"catalog:$q", Util.sha(oracle(q)), fingerprint, Canon.summarize(schema, rows))
       }
     }
@@ -173,6 +175,7 @@ final class SqlLab(opts: Opts) extends Workload {
       ctx.op("lab.analyze", id)(executor.analyze(q.sql)).foreach { case (run, secs) =>
         labels += 1
         Util.addTo(figs, "lab.analyze_s", secs)
+        Util.addTo(figs, "round_cpu_s", ctx.tracer.lastCpuS)
         if (q.bucket <= 2) Util.addTo(figs, "lab.light_s", secs)
         if (q.bucket >= 6) Util.addTo(figs, "lab.heavy_s", secs)
         val scanned = Checks.scannedTables(run.planJson.getOrElse(""))
@@ -204,6 +207,9 @@ final class EstimatorBench(opts: Opts) extends Workload {
   private var figures = Map.empty[String, Double]
 
   override def setupFigures: Map[String, Double] = figures
+  // a set-up here takes a fifth of a second, and the median of three
+  // spread by a third between runs; seven steady it
+  override def setupReps: Int = 7
 
   def setup(spark: SparkSession, ctx: Ctx): Unit = {
     val statsPath = opts.repoFile(StatsPath)
@@ -219,12 +225,13 @@ final class EstimatorBench(opts: Opts) extends Workload {
 
   def round(spark: SparkSession, ctx: Ctx): Map[String, Double] = {
     import spark.implicits._
-    val figs = mutable.Map.empty[String, Double]
+    val figs = mutable.Map("round_cpu_s" -> 0.0)
     // parse
     var t = 0.0
     sample.foreach { q =>
       ctx.op("ir.parse", "parse")(graft.ir.Frontend.parseSql(q.sql, Some(db))).foreach { case (plan, s) =>
         t += s
+        Util.addTo(figs, "round_cpu_s", ctx.tracer.lastCpuS)
         val got = Checks.planTables(plan)
         ctx.check("parse", got == Util.fromTables(q.sql), s"plan tables $got for ${q.sql.take(200)}")
       }
@@ -236,6 +243,7 @@ final class EstimatorBench(opts: Opts) extends Workload {
     sample.foreach { q =>
       ctx.op("encode.encode", "encode")(graft.encode.Encoder.encodeQuery(db, q.sql)).foreach { case (enc, s) =>
         t += s
+        Util.addTo(figs, "round_cpu_s", ctx.tracer.lastCpuS)
         val bad = enc.preorder.find(n => Widths.get(n.nodeType).forall(_ != n.vector.length))
         ctx.check("encode", bad.isEmpty,
           bad.map(n => s"${n.nodeType} width ${n.vector.length}").getOrElse(""))
@@ -258,6 +266,7 @@ final class EstimatorBench(opts: Opts) extends Workload {
       (feats, preds)
     }.foreach { case ((feats, preds), s) =>
       figs("train_s") = s
+      Util.addTo(figs, "round_cpu_s", ctx.tracer.lastCpuS)
       val truth = hold.map(q => log2(q.seconds))
       val med = Main.median(train.map(q => log2(q.seconds)))
       val mae = preds.zip(truth).map { case (p, y) => math.abs(p - y) }.sum / truth.size
@@ -278,6 +287,7 @@ final class EstimatorBench(opts: Opts) extends Workload {
       scored match {
         case (scala.util.Success(out), s) =>
           t += s
+          Util.addTo(figs, "round_cpu_s", ctx.tracer.lastCpuS)
           figs(s"score.${name}_s") = s
           rows += out.length
           val nan = out.count(_._2.isNaN)

@@ -15,6 +15,7 @@ import hashlib
 import json
 import os
 import random
+import signal
 import subprocess
 import sys
 import time
@@ -33,7 +34,7 @@ JVM_TIMEOUT_S = 165
 HEAP = ["-Xms2g", "-Xmx2g", "-Xmn512m"]
 # The sql_lab sample: PER_STRATUM queries from each runtime stratum of
 # the pool (reference buckets 0-2, 3-5 and 6-8), chosen with this fixed
-# seed; a run's --seed orders it.
+# seed and labelled in this order in every run.
 SAMPLE_SEED = 17
 PER_STRATUM = 2
 STRATA = ((0, 1, 2), (3, 4, 5), (6, 7, 8))
@@ -119,11 +120,17 @@ def jvm(args, out):
         "-Dlog4j2.level=ERROR", "-cp", cp, "perfbench.Main",
         "--root", ROOT, "--data", DATA, "--cores", str(cores()), "--out", out] + args
     proc = subprocess.Popen(cmd, cwd=ROOT, stdout=sys.stderr, stderr=sys.stderr)
+    rc = None
     try:
         rc = proc.wait(timeout=JVM_TIMEOUT_S)
     except subprocess.TimeoutExpired:
-        proc.kill()
-        proc.wait()
+        pass
+    finally:
+        # also on SIGTERM (SystemExit, see main): the JVM must not outlive the run
+        if proc.poll() is None:
+            proc.kill()
+            proc.wait()
+    if rc is None:
         fail(f"the harness did not finish within {JVM_TIMEOUT_S} s")
     if rc != 0 or not os.path.isfile(out):
         fail(f"the harness exited with code {rc}")
@@ -145,13 +152,11 @@ def lab_pool(expected):
     return pool
 
 
-def lab_sample(pool, seed, sample_seed=SAMPLE_SEED):
-    """The sql_lab sample, in the order `seed` gives it."""
+def lab_sample(pool, sample_seed=SAMPLE_SEED):
+    """The sql_lab sample, light stratum first."""
     rng = random.Random(sample_seed)
-    picked = [e for stratum in STRATA
-              for e in rng.sample([e for b in stratum for e in pool.get(b, [])], PER_STRATUM)]
-    random.Random(seed).shuffle(picked)
-    return picked
+    return [e for stratum in STRATA
+            for e in rng.sample([e for b in stratum for e in pool.get(b, [])], PER_STRATUM)]
 
 
 def check_outputs(path, expected):
@@ -188,6 +193,7 @@ def main():
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     a = ap.parse_args()
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     sys.path.insert(0, HERE)
     if not os.path.isfile(BENCHMARK):
         fail("no BENCHMARK.json at the repository root")
@@ -206,7 +212,7 @@ def main():
     if a.workload == "sql_lab":
         sample = out + ".sample.tsv"
         with open(sample, "w") as fh:
-            for e in lab_sample(lab_pool(expected), a.seed):
+            for e in lab_sample(lab_pool(expected)):
                 fh.write(f"{e['seconds']}\t{e['sql']}\n")
         args += ["--sample", sample]
     jvm(args, out)
