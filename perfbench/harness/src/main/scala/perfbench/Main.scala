@@ -123,6 +123,11 @@ object Main {
     (System.nanoTime() - t0) / 1e9
   }
 
+  private val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+  /** CPU seconds the whole JVM has used so far, every thread counted. */
+  def processCpuS(): Double = osBean.getProcessCpuTime / 1e9
+
   def peakRssMb(): Double = {
     val status = Files.readAllLines(Paths.get("/proc/self/status")).toArray(Array.empty[String])
     status.find(_.startsWith("VmHWM:")).map(_.split("\\s+")(1).toDouble / 1024.0).getOrElse(Double.NaN)
@@ -159,17 +164,21 @@ object Main {
     val ctx = new Ctx(opts, tracer, outputs)
 
     // set-up, repeated: each repetition builds a fresh session and loads
-    // the workload's inputs; the median repetition is reported
-    val setups = mutable.ArrayBuffer.empty[(Double, Map[String, Double])]
+    // the workload's inputs; the median repetition's CPU seconds are
+    // reported, for the reason given at `endToEnd` (the estimator's
+    // fifth-of-a-second set-up took half as long again in wall time
+    // when a tenth to a fifth of the CPU time was stolen)
+    val setups = mutable.ArrayBuffer.empty[(Double, Double, Map[String, Double])]
     var spark: SparkSession = null
     for (rep <- 0 until wl.setupReps) {
       if (spark != null) spark.stop()
       val t0 = System.nanoTime()
+      val cpu0 = processCpuS()
       spark = session(opts, work)
       wl.setup(spark, ctx)
-      setups += (((System.nanoTime() - t0) / 1e9, wl.setupFigures))
+      setups += (((System.nanoTime() - t0) / 1e9, processCpuS() - cpu0, wl.setupFigures))
     }
-    val setupS = median(setups.map(_._1).toSeq)
+    val setupS = median(setups.map(_._2).toSeq)
 
     // whole rounds until the run's seconds are spent
     val events = new SparkEvents
@@ -201,7 +210,7 @@ object Main {
       "peak_rss_mb" -> rss,
       "round_cpu_s" -> all("round_cpu_s"))
     val hostCalib = median(Seq(calib0, calib1))
-    val setupFigs = setups.head._2 // the first set-up is the one that loads
+    val setupFigs = setups.head._3 // the first set-up is the one that loads
 
     val layer: Map[String, Double] = if (!opts.trace) Map.empty else {
       val perRound = rounds.toSeq.map { case (figs, ms0, ms1) =>
@@ -220,7 +229,8 @@ object Main {
     val record = Map(
       "workload" -> opts.workload, "seed" -> opts.seed, "trace" -> opts.trace,
       "cores" -> opts.cores, "rounds" -> rounds.size, "measured_s" -> measuredS,
-      "setup_reps_s" -> setups.map(_._1).toSeq, "host.calib_s" -> hostCalib,
+      "setup_reps_s" -> setups.map(_._1).toSeq, "setup_reps_cpu_s" -> setups.map(_._2).toSeq,
+      "host.calib_s" -> hostCalib,
       "figures" -> (all ++ setupFigs ++ endToEnd),
       "round_figures" -> rounds.map(_._1).toSeq)
     val result = Map(

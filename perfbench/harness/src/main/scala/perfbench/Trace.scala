@@ -25,8 +25,6 @@ final class Tracer(val enabled: Boolean) {
   /** CPU seconds of the whole JVM (every thread: the caller, Spark's
     * task threads, GC and JIT) during the span that ended last. */
   var lastCpuS: Double = 0.0
-  private val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
   def spans: Seq[Span] = buf.toSeq
 
@@ -37,12 +35,12 @@ final class Tracer(val enabled: Boolean) {
     val parent = stack.headOption.getOrElse(-1)
     stack = id :: stack
     val ms0 = System.currentTimeMillis()
-    val cpu0 = os.getProcessCpuTime
+    val cpu0 = Main.processCpuS()
     val t0 = System.nanoTime()
     try {
       val a = f
       val secs = (System.nanoTime() - t0) / 1e9
-      lastCpuS = (os.getProcessCpuTime - cpu0) / 1e9
+      lastCpuS = Main.processCpuS() - cpu0
       if (enabled) buf += Span(id, name, parent, round, ms0, System.currentTimeMillis(), secs)
       (a, secs)
     } catch {
